@@ -2,36 +2,68 @@
 fixed-length sequence shards a pretraining job actually reads.
 
 Composes the engine's existing pieces into one artifact-producing
-plan:
+plan, shared by the initial write and the incremental append:
 
 1. ``chunk_documents`` — token-window chunks (chunking.py),
 2. ``pack_chunks`` — greedy fill into ``budget_tokens`` sequences
-   (packing.py, bucket-parallel),
-3. ``global_prefix_sum`` — every sequence's global serialization
-   offset in token space with no single-partition window
-   (ordering.py, the q89 shape),
-4. a range-clustered parquet write sized by ``sequences_per_shard``
-   (each shard covers a contiguous global sequence range, so a
-   trainer can seek by global index using footer min/max alone),
-5. a MANIFEST (one row per shard file: sequence range, token range,
-   counts) plus a stats JSON — both derived from the data written,
-   not recomputed upstream.
+   (packing.py, bucket-parallel); the packed batch is persisted once
+   and released when the write ends,
+3. global offsets from per-bin totals: one bounded collect of at most
+   ``num_bins`` rows (sequence count, token sum, chunk count per bin).
+   The order key is (bin_id, seq_id) and ``pack_chunks`` numbers
+   ``seq_id`` densely per bin, so a sequence's dense global index is
+   its bin's offset plus ``seq_id``, and its token offset is its bin's
+   offset plus a bin-local running sum (a window partitioned by bin),
+4. one shard write: hash-partitioned on ``shard_id`` (a contiguous
+   range of ``sequences_per_shard`` global sequences), sorted by
+   ``global_seq`` within each file, so a trainer can seek by global
+   index using footer min/max alone,
+5. a MANIFEST (one row per shard: sequence range, token range,
+   counts) aggregated from the new shard partitions as landed, merged
+   with the old rows on the driver and committed with a rename-swap,
+   plus a stats JSON.
 
-Every count is observed from the landed parquet (the execute-once
-discipline of corpus_pipeline); the conservation invariants the q66b
-oracle checks (token totals, chunk counts, zero over-budget) hold by
-construction and are test-asserted against the written artifact.
+Sequence and token counts are observed from the landed parquet (the
+execute-once discipline of corpus_pipeline) and must match the packed
+batch's per-bin totals before the manifest commits; the chunk count
+is the per-bin sum of packed chunk references. The conservation
+invariants the q66b oracle checks (token totals, chunk counts, zero
+over-budget) hold by construction and are test-asserted against the
+written artifact.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_guiacores_spark import io as gio
 from etl_guiacores_spark.operators.chunking import chunk_documents
-from etl_guiacores_spark.operators.ordering import global_prefix_sum
-from etl_guiacores_spark.operators.packing import pack_chunks
+from etl_guiacores_spark.operators.packing import PACKED_SCHEMA, pack_chunks
+
+#: column layout of the shard files (``shard_id`` is the partition
+#: directory, not a file column)
+SHARD_SCHEMA = T.StructType(
+    PACKED_SCHEMA.fields
+    + [
+        T.StructField("token_offset", T.LongType()),
+        T.StructField("global_seq", T.LongType()),
+        T.StructField("shard_id", T.IntegerType()),
+    ]
+)
+
+MANIFEST_SCHEMA = pa.schema(
+    [
+        ("shard_id", pa.int32()),
+        ("first_seq", pa.int64()),
+        ("last_seq", pa.int64()),
+        ("first_token", pa.int64()),
+        ("n_sequences", pa.int64()),
+        ("n_tokens", pa.int64()),
+    ]
+)
 
 
 def _manifest_tmp(manifest_path: str) -> str:
@@ -42,31 +74,44 @@ def _manifest_old(manifest_path: str) -> str:
     return manifest_path.rstrip("/") + ".__commit_old__"
 
 
-def _commit_manifest_atomic(manifest_df: DataFrame, manifest_path: str) -> None:
+def _read_manifest(manifest_path: str) -> list[dict]:
+    """The committed manifest rows, ordered by shard_id — a driver-side
+    footer-and-rows read (one small row per shard), no Spark job."""
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(manifest_path, schema=MANIFEST_SCHEMA).to_pylist()
+    return sorted(rows, key=lambda r: r["shard_id"])
+
+
+def _commit_manifest_atomic(rows: list[dict], manifest_path: str) -> None:
     """Publish a manifest with a rename-swap (the compact_parquet
-    pattern) instead of Spark's mode('overwrite'), which deletes the
-    old directory BEFORE the new files land — a crash in that window
-    would leave no manifest at all, and the prune-on-retry protocol
-    would then read the whole shard set as orphan (the round-5 judge's
-    high finding). With the swap, the manifest directory is either the
-    fully-committed old version or the fully-committed new one at
-    every instant except the sub-millisecond gap between the two
-    renames — and THAT gap leaves ``<manifest>.__commit_old__`` behind,
-    which :func:`_recover_manifest` rolls back to a valid state on the
-    next touch. A ``_SUCCESS`` marker is guaranteed inside the
-    published directory (touched explicitly in case the Hadoop
-    committer was configured not to), so readers can distinguish a
-    committed manifest from debris."""
+    pattern) instead of an overwrite, which deletes the old directory
+    BEFORE the new files land — a crash in that window would leave no
+    manifest at all, and the prune-on-retry protocol would then read
+    the whole shard set as orphan. With the swap, the manifest
+    directory is either the fully-committed old version or the
+    fully-committed new one at every instant except the
+    sub-millisecond gap between the two renames — and THAT gap leaves
+    ``<manifest>.__commit_old__`` behind, which
+    :func:`_recover_manifest` rolls back to a valid state on the next
+    touch. The rows are written driver-side with pyarrow (one row per
+    shard; the writer is local-only), and a ``_SUCCESS`` marker is
+    touched inside the published directory so readers can distinguish
+    a committed manifest from debris."""
     import os
     import shutil
 
+    import pyarrow.parquet as pq
+
     tmp, old = _manifest_tmp(manifest_path), _manifest_old(manifest_path)
     shutil.rmtree(tmp, ignore_errors=True)
-    manifest_df.write.mode("overwrite").parquet(tmp)
-    success = os.path.join(tmp, "_SUCCESS")
-    if not os.path.exists(success):
-        with open(success, "w"):
-            pass
+    os.makedirs(tmp)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=MANIFEST_SCHEMA),
+        os.path.join(tmp, "part-00000.snappy.parquet"),
+    )
+    with open(os.path.join(tmp, "_SUCCESS"), "w"):
+        pass
     shutil.rmtree(old, ignore_errors=True)
     if os.path.isdir(manifest_path):
         os.rename(manifest_path, old)
@@ -106,6 +151,203 @@ def _recover_manifest(out_dir: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _bin_offsets(packed: DataFrame) -> tuple[dict, dict, dict]:
+    """Per-bin sequence and token offsets plus the batch totals, from
+    ONE bounded collect of at most ``num_bins`` rows.
+
+    The offsets are exact only if ``pack_chunks`` numbered ``seq_id``
+    densely from 0 within every bin; a bin where ``max(seq_id) + 1``
+    differs from its row count raises instead of writing wrong
+    offsets. Each packed chunk contributes one ``doc_ids`` entry, so
+    the chunk count rides on the same aggregate."""
+    bins = packed.groupBy("bin_id").agg(
+        F.count("*").alias("n"),
+        F.max("seq_id").alias("max_seq"),
+        F.sum("n_tokens").cast("long").alias("tokens"),
+        F.sum(F.size("doc_ids")).cast("long").alias("chunks"),
+    )
+    seq_off: dict[int, int] = {}
+    tok_off: dict[int, int] = {}
+    totals = {"sequences": 0, "tokens": 0, "chunks": 0}
+    for r in sorted(bins.collect(), key=lambda r: r["bin_id"]):
+        if r["max_seq"] + 1 != r["n"]:
+            raise RuntimeError(
+                f"shard writer: bin {r['bin_id']} holds {r['n']} sequence(s) "
+                f"but max(seq_id) = {r['max_seq']}; pack_chunks must number "
+                "seq_id densely from 0 per bin, or the global offsets "
+                "derived from per-bin totals would be wrong"
+            )
+        seq_off[r["bin_id"]] = totals["sequences"]
+        tok_off[r["bin_id"]] = totals["tokens"]
+        totals["sequences"] += r["n"]
+        totals["tokens"] += r["tokens"]
+        totals["chunks"] += r["chunks"]
+    return seq_off, tok_off, totals
+
+
+def _by_bin(offsets: dict) -> Column:
+    """``offsets[bin_id]`` as a literal-map lookup (<= num_bins
+    entries: no join, no job)."""
+    if not offsets:
+        return F.lit(0).cast("long")
+    pairs = [
+        c
+        for b, off in offsets.items()
+        for c in (F.lit(b).cast("int"), F.lit(off).cast("long"))
+    ]
+    return F.element_at(F.create_map(*pairs), F.col("bin_id"))
+
+
+def _land_shards(
+    docs: DataFrame,
+    out_dir: str,
+    old_rows: list[dict] | None,
+    budget_tokens: int,
+    chunk_tokens: int,
+    overlap: int,
+    num_bins: int,
+    sequences_per_shard: int,
+) -> dict:
+    """The body both writers share: chunk -> pack -> offsets -> shard
+    write -> manifest -> stats.
+
+    ``old_rows`` is the committed manifest the new sequences continue,
+    or None for an initial write, which overwrites ``{out_dir}/shards``
+    and keeps the chunk table at ``{out_dir}/chunks``. An append
+    writes no handoffs: the packed batch is persisted for the two
+    passes that read it (the per-bin totals, the shard write) and
+    released in a ``finally``; only its stats JSON lands under
+    ``{out_dir}/append_batches/``."""
+    import os
+    import time
+
+    spark = docs.sparkSession
+    rows = old_rows or []
+    if rows:
+        last = rows[-1]
+        seq_base = int(last["first_seq"]) + int(last["n_sequences"])
+        token_base = sum(int(r["n_tokens"]) for r in rows)
+        shard_base = int(last["shard_id"]) + 1
+    else:
+        seq_base, token_base, shard_base = 0, 0, 0
+
+    timings: dict[str, float] = {}
+    t0 = time.time()
+    n_docs = docs.count()
+    chunks = chunk_documents(docs, chunk_tokens=chunk_tokens, overlap=overlap)
+    if old_rows is None:
+        gio.write_handoff(chunks, f"{out_dir}/chunks")
+        # explicit schema on every re-read: an empty stage writes no
+        # row groups and inference would crash (corpus_pipeline's rule)
+        chunks = spark.read.schema(chunks.schema).parquet(f"{out_dir}/chunks")
+    timings["chunk_s"] = round(time.time() - t0, 1)
+
+    t0 = time.time()
+    shards_path = f"{out_dir}/shards"
+    packed = pack_chunks(
+        chunks, budget_tokens=budget_tokens, num_bins=num_bins
+    ).persist()
+    try:
+        seq_off, tok_off, totals = _bin_offsets(packed)
+        timings["pack_s"] = round(time.time() - t0, 1)
+        t0 = time.time()
+
+        # global order key (bin_id, seq_id): a bin's offset plus the
+        # dense per-bin seq_id / the bin-local exclusive token sum
+        preceding = Window.partitionBy("bin_id").orderBy("seq_id").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        in_bin = F.coalesce(F.sum("n_tokens").over(preceding), F.lit(0))
+        global_seq = F.lit(seq_base) + _by_bin(seq_off) + F.col("seq_id")
+        seqs = packed.select(
+            *PACKED_SCHEMA.names,
+            (F.lit(token_base) + _by_bin(tok_off) + in_bin)
+            .cast("long")
+            .alias("token_offset"),
+            global_seq.cast("long").alias("global_seq"),
+            (
+                F.floor((global_seq - F.lit(seq_base)) / sequences_per_shard)
+                + F.lit(shard_base)
+            )
+            .cast("int")
+            .alias("shard_id"),
+        )
+        # append mode creates only NEW shard_id partitions (ids start
+        # past the manifest tail by construction)
+        (
+            seqs.repartition("shard_id")
+            .sortWithinPartitions("shard_id", "global_seq")
+            .write.mode("overwrite" if old_rows is None else "append")
+            .option("maxRecordsPerFile", sequences_per_shard)
+            .partitionBy("shard_id")
+            .parquet(shards_path)
+        )
+        timings["offset_and_shard_write_s"] = round(time.time() - t0, 1)
+    finally:
+        packed.unpersist()
+
+    # manifest rows of the NEW partitions only, aggregated from the
+    # landed files; the listing never touches the shard history
+    t0 = time.time()
+    n_new_shards = -(-totals["sequences"] // sequences_per_shard)
+    new_rows: list[dict] = []
+    if n_new_shards:
+        landed = (
+            spark.read.schema(SHARD_SCHEMA)
+            .option("basePath", shards_path)
+            .parquet(*[
+                f"{shards_path}/shard_id={s}"
+                for s in range(shard_base, shard_base + n_new_shards)
+            ])
+        )
+        new_rows = sorted(
+            (
+                r.asDict()
+                for r in landed.groupBy("shard_id").agg(
+                    F.min("global_seq").alias("first_seq"),
+                    F.max("global_seq").alias("last_seq"),
+                    F.min("token_offset").alias("first_token"),
+                    F.count("*").alias("n_sequences"),
+                    F.sum("n_tokens").cast("long").alias("n_tokens"),
+                ).collect()
+            ),
+            key=lambda r: r["shard_id"],
+        )
+    n_sequences = sum(r["n_sequences"] for r in new_rows)
+    total_tokens = sum(r["n_tokens"] for r in new_rows)
+    if (n_sequences, total_tokens) != (totals["sequences"], totals["tokens"]):
+        raise RuntimeError(
+            f"shard writer: landed shards hold {n_sequences} sequence(s) / "
+            f"{total_tokens} token(s) but the packed batch had "
+            f"{totals['sequences']} / {totals['tokens']}; manifest not "
+            "committed"
+        )
+    _commit_manifest_atomic(rows + new_rows, f"{out_dir}/manifest")
+    timings["manifest_s"] = round(time.time() - t0, 1)
+
+    stats = {
+        "timings_s": timings,
+        "n_docs": n_docs,
+        "n_chunks": totals["chunks"],
+        "n_sequences": n_sequences,
+        "total_tokens": total_tokens,
+        "n_shards": len(new_rows),
+        "budget_tokens": budget_tokens,
+        "fill_ratio": round(total_tokens / (n_sequences * budget_tokens), 4)
+        if n_sequences
+        else 0.0,
+    }
+    if old_rows is None:
+        stats_path = f"{out_dir}/stats.json"
+    else:
+        stats["appended_after_seq"] = seq_base
+        batch_dir = f"{out_dir}/append_batches/batch_{shard_base:06d}"
+        os.makedirs(batch_dir, exist_ok=True)
+        stats_path = f"{batch_dir}/stats.json"
+    gio.write_stats_json(stats, stats_path)
+    return stats
+
+
 def write_training_shards(
     docs: DataFrame,
     out_dir: str,
@@ -126,93 +368,10 @@ def write_training_shards(
     ``token_offset`` are their dense global index and cumulative token
     start, computed distributed.
     """
-    import time
-
-    spark = docs.sparkSession
-    timings: dict[str, float] = {}
-    t0 = time.time()
-    n_docs = docs.count()
-
-    chunks = chunk_documents(
-        docs, chunk_tokens=chunk_tokens, overlap=overlap
+    return _land_shards(
+        docs, out_dir, None, budget_tokens, chunk_tokens, overlap,
+        num_bins, sequences_per_shard,
     )
-    gio.write_handoff(chunks, f"{out_dir}/chunks")
-    # explicit schema on every re-read: an empty stage writes no
-    # row groups and inference would crash (corpus_pipeline's rule)
-    chunks = spark.read.schema(chunks.schema).parquet(f"{out_dir}/chunks")
-    n_chunks = chunks.count()
-    timings["chunk_s"] = round(time.time() - t0, 1)
-
-    t0 = time.time()
-    packed = pack_chunks(
-        chunks, budget_tokens=budget_tokens, num_bins=num_bins
-    )
-    gio.write_handoff(packed, f"{out_dir}/packed")
-    packed = spark.read.schema(packed.schema).parquet(f"{out_dir}/packed")
-    timings["pack_s"] = round(time.time() - t0, 1)
-    t0 = time.time()
-
-    # deterministic global order key; unique because (bin, seq) is
-    ordered = packed.withColumn(
-        "__ord",
-        F.col("bin_id").cast("long") * F.lit(1 << 40) + F.col("seq_id"),
-    )
-    with_off = global_prefix_sum(
-        ordered, order_col="__ord", value_col="n_tokens",
-        out_col="token_offset", exclusive=True,
-    )
-    seqs = (
-        global_prefix_sum(
-            with_off.withColumn("__one", F.lit(1)),
-            order_col="__ord", value_col="__one", out_col="global_seq",
-        )
-        .withColumn("global_seq", F.col("global_seq") - 1)  # 0-based
-        .withColumn("shard_id", F.floor(F.col("global_seq") / sequences_per_shard).cast("int"))
-        .drop("__one", "__ord")
-    )
-    (
-        seqs.repartitionByRange(F.col("shard_id"), F.col("global_seq"))
-        .sortWithinPartitions("global_seq")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", sequences_per_shard)
-        .partitionBy("shard_id")
-        .parquet(f"{out_dir}/shards")
-    )
-    shards = spark.read.schema(seqs.schema).parquet(f"{out_dir}/shards")
-    timings["offset_and_shard_write_s"] = round(time.time() - t0, 1)
-    t0 = time.time()
-
-    manifest = (
-        shards.groupBy("shard_id")
-        .agg(
-            F.min("global_seq").alias("first_seq"),
-            F.max("global_seq").alias("last_seq"),
-            F.min("token_offset").alias("first_token"),
-            F.count("*").alias("n_sequences"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .orderBy("shard_id")
-    )
-    _commit_manifest_atomic(manifest, f"{out_dir}/manifest")
-    mrows = spark.read.schema(manifest.schema).parquet(f"{out_dir}/manifest").collect()
-
-    timings["manifest_s"] = round(time.time() - t0, 1)
-    total_tokens = int(sum(r["n_tokens"] for r in mrows))
-    n_sequences = int(sum(r["n_sequences"] for r in mrows))
-    stats = {
-        "timings_s": timings,
-        "n_docs": n_docs,
-        "n_chunks": n_chunks,
-        "n_sequences": n_sequences,
-        "total_tokens": total_tokens,
-        "n_shards": len(mrows),
-        "budget_tokens": budget_tokens,
-        "fill_ratio": round(total_tokens / (n_sequences * budget_tokens), 4)
-        if n_sequences
-        else 0.0,
-    }
-    gio.write_stats_json(stats, f"{out_dir}/stats.json")
-    return stats
 
 
 def append_training_shards(
@@ -230,15 +389,20 @@ def append_training_shards(
     petabytes to add gigabytes).
 
     The manifest tail (last shard id, next global_seq, next
-    token_offset — ONE bounded row per shard, the same collect policy
-    as the manifest itself) seeds the new batch: the increment is
-    chunked and packed independently, its local prefix sums are
-    offset by the tail, and its sequences land in NEW shard files
-    starting at ``last_shard + 1``. The last existing shard keeps its
-    partial fill — append NEVER rewrites an existing file, so
-    concurrent trainers reading landed shards are undisturbed and a
-    crashed append leaves old shards fully valid (re-run after
-    clearing the staging dir).
+    token_offset — read driver-side, one small row per shard) seeds
+    the new batch: the increment is chunked and packed independently,
+    its per-bin offsets start at the tail, and its sequences land in
+    NEW shard files starting at ``last_shard + 1``. The batch writes
+    no chunk or packed handoff (the packed frame is persisted for the
+    write and released after it); only
+    ``append_batches/batch_<first new shard>/stats.json`` lands beside
+    the shards. The last existing shard keeps its partial fill —
+    append NEVER rewrites an existing file, so concurrent trainers
+    reading landed shards are undisturbed and a crashed append leaves
+    old shards fully valid (:func:`append_batch_shards` prunes the
+    orphans before a retry). The new manifest rows are aggregated from
+    the new shard partitions only, so a batch never lists the landed
+    history.
 
     Invariants preserved across the COMBINED artifact (test-asserted):
     ``global_seq`` stays dense 0..n-1, shards tile the token stream
@@ -258,9 +422,7 @@ def append_training_shards(
     :func:`write_training_shards` for the initial load.
     """
     import os
-    import time
 
-    spark = docs.sparkSession
     _recover_manifest(out_dir)
     manifest_path = f"{out_dir}/manifest"
     if not os.path.isdir(manifest_path):
@@ -268,114 +430,10 @@ def append_training_shards(
             f"append_training_shards: no manifest at {manifest_path} — "
             "write the initial shard set with write_training_shards first"
         )
-    old_manifest = spark.read.parquet(manifest_path)
-    m_schema = old_manifest.schema
-    old_rows = old_manifest.orderBy("shard_id").collect()
-    if old_rows:
-        last = old_rows[-1]
-        seq_base = int(last["first_seq"]) + int(last["n_sequences"]) - 1 + 1
-        token_base = sum(int(r["n_tokens"]) for r in old_rows)
-        shard_base = int(last["shard_id"]) + 1
-    else:
-        seq_base, token_base, shard_base = 0, 0, 0
-
-    timings: dict[str, float] = {}
-    t0 = time.time()
-    n_docs = docs.count()
-    batch_dir = f"{out_dir}/append_batches/batch_{shard_base:06d}"
-    chunks = chunk_documents(docs, chunk_tokens=chunk_tokens, overlap=overlap)
-    gio.write_handoff(chunks, f"{batch_dir}/chunks")
-    chunks = spark.read.schema(chunks.schema).parquet(f"{batch_dir}/chunks")
-    n_chunks = chunks.count()
-    timings["chunk_s"] = round(time.time() - t0, 1)
-
-    t0 = time.time()
-    packed = pack_chunks(chunks, budget_tokens=budget_tokens, num_bins=num_bins)
-    gio.write_handoff(packed, f"{batch_dir}/packed")
-    packed = spark.read.schema(packed.schema).parquet(f"{batch_dir}/packed")
-    timings["pack_s"] = round(time.time() - t0, 1)
-    t0 = time.time()
-
-    ordered = packed.withColumn(
-        "__ord",
-        F.col("bin_id").cast("long") * F.lit(1 << 40) + F.col("seq_id"),
+    return _land_shards(
+        docs, out_dir, _read_manifest(manifest_path), budget_tokens,
+        chunk_tokens, overlap, num_bins, sequences_per_shard,
     )
-    with_off = global_prefix_sum(
-        ordered, order_col="__ord", value_col="n_tokens",
-        out_col="token_offset", exclusive=True,
-    )
-    seqs = (
-        global_prefix_sum(
-            with_off.withColumn("__one", F.lit(1)),
-            order_col="__ord", value_col="__one", out_col="global_seq",
-        )
-        .withColumn("token_offset", F.col("token_offset") + F.lit(token_base))
-        .withColumn(
-            "global_seq", F.col("global_seq") - 1 + F.lit(seq_base)
-        )
-        .withColumn(
-            "shard_id",
-            (
-                F.floor((F.col("global_seq") - F.lit(seq_base)) / sequences_per_shard)
-                + F.lit(shard_base)
-            ).cast("int"),
-        )
-        .drop("__one", "__ord")
-    )
-    # append-mode partitioned write: only NEW shard_id partitions are
-    # created (shard ids start past the manifest tail by construction)
-    (
-        seqs.repartitionByRange(F.col("shard_id"), F.col("global_seq"))
-        .sortWithinPartitions("global_seq")
-        .write.mode("append")
-        .option("maxRecordsPerFile", sequences_per_shard)
-        .partitionBy("shard_id")
-        .parquet(f"{out_dir}/shards")
-    )
-    timings["offset_and_shard_write_s"] = round(time.time() - t0, 1)
-    t0 = time.time()
-
-    new_shards = spark.read.schema(seqs.schema).parquet(
-        f"{out_dir}/shards"
-    ).filter(F.col("shard_id") >= shard_base)
-    new_manifest = (
-        new_shards.groupBy("shard_id")
-        .agg(
-            F.min("global_seq").alias("first_seq"),
-            F.max("global_seq").alias("last_seq"),
-            F.min("token_offset").alias("first_token"),
-            F.count("*").alias("n_sequences"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-    )
-    combined = (
-        spark.createDataFrame([r.asDict() for r in old_rows], m_schema)
-        if old_rows
-        else spark.createDataFrame([], m_schema)
-    ).unionByName(new_manifest.select(*[f.name for f in m_schema.fields])).orderBy(
-        "shard_id"
-    )
-    _commit_manifest_atomic(combined, manifest_path)
-    mrows = spark.read.schema(m_schema).parquet(manifest_path).collect()
-    timings["manifest_s"] = round(time.time() - t0, 1)
-
-    new_tokens = int(sum(int(r["n_tokens"]) for r in mrows)) - token_base
-    new_seqs = int(sum(int(r["n_sequences"]) for r in mrows)) - seq_base
-    stats = {
-        "timings_s": timings,
-        "n_docs": n_docs,
-        "n_chunks": n_chunks,
-        "n_sequences": new_seqs,
-        "total_tokens": new_tokens,
-        "n_shards": len(mrows) - len(old_rows),
-        "budget_tokens": budget_tokens,
-        "fill_ratio": round(new_tokens / (new_seqs * budget_tokens), 4)
-        if new_seqs
-        else 0.0,
-        "appended_after_seq": seq_base,
-    }
-    gio.write_stats_json(stats, f"{batch_dir}/stats.json")
-    return stats
 
 
 def prune_orphan_shards(out_dir: str, allow_full_reset: bool = False) -> int:

@@ -323,3 +323,125 @@ class TestBatchAppendProtocol:
         rows = sorted((r["global_seq"], r["token_offset"]) for r in seqs.collect())
         assert rows[0] == (0, 0)
         assert [g for g, _ in rows] == list(range(len(rows)))
+
+
+    def test_append_offsets_match_driver_side_oracle(self, spark, tmp_path):
+        """Every landed row's (global_seq, token_offset, shard_id) equals a
+        recomputation from the rows in (bin_id, seq_id) order, across an
+        append spanning several new shards; every manifest row equals the
+        group-by of its shard's landed rows."""
+        from etl_guiacores_spark.plans.shard_writer import append_training_shards
+
+        base = self._docs(spark, 0, 150)
+        inc = self._docs(spark, 150, 300).withColumn(
+            "doc_id", F.col("doc_id") + 1_000_000
+        )
+        out = str(tmp_path / "oracle")
+        sps = 7
+        kw = dict(self.KW, sequences_per_shard=sps)
+        b = write_training_shards(base, out, **kw)
+        a = append_training_shards(inc, out, **kw)
+        assert a["n_shards"] >= 3
+
+        rows = [r.asDict() for r in spark.read.parquet(f"{out}/shards").collect()]
+        batches = (
+            [r for r in rows if r["doc_ids"][0] < 1_000_000],
+            [r for r in rows if r["doc_ids"][0] >= 1_000_000],
+        )
+        seq, tok, shard = 0, 0, 0
+        for batch in batches:
+            shard_base, seq_base = shard, seq
+            for r in sorted(batch, key=lambda r: (r["bin_id"], r["seq_id"])):
+                assert (r["global_seq"], r["token_offset"], r["shard_id"]) == (
+                    seq, tok, shard_base + (seq - seq_base) // sps
+                )
+                seq, tok = seq + 1, tok + r["n_tokens"]
+            shard = shard_base + -(-(seq - seq_base) // sps)
+        assert seq == b["n_sequences"] + a["n_sequences"]
+        assert shard == b["n_shards"] + a["n_shards"]
+
+        manifest = spark.read.parquet(f"{out}/manifest").collect()
+        assert len(manifest) == shard
+        for m in manifest:
+            mine = [r for r in rows if r["shard_id"] == m["shard_id"]]
+            assert m.asDict() == {
+                "shard_id": m["shard_id"],
+                "first_seq": min(r["global_seq"] for r in mine),
+                "last_seq": max(r["global_seq"] for r in mine),
+                "first_token": min(r["token_offset"] for r in mine),
+                "n_sequences": len(mine),
+                "n_tokens": sum(r["n_tokens"] for r in mine),
+            }
+
+
+    def test_append_job_budget_and_hygiene(self, spark, tmp_path, monkeypatch):
+        """A small-batch append runs at most 12 Spark jobs, leaves only its
+        stats JSON beside the shards, and releases its persisted frame,
+        also when the shard write fails."""
+        import os
+
+        import pytest
+        from pyspark.sql import DataFrameWriter
+
+        from etl_guiacores_spark.plans.shard_writer import append_training_shards
+
+        sc = spark.sparkContext
+        out = str(tmp_path / "budget")
+        kw = dict(self.KW, sequences_per_shard=20)
+        first = write_training_shards(self._docs(spark, 0, 100), out, **kw)
+        batch = self._docs(spark, 100, 200)
+
+        def persisted():
+            return set(sc._jsc.getPersistentRDDs().keys())
+
+        held = persisted()
+        group = "shard-append-budget"
+        saved = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        try:
+            stats = append_training_shards(batch, out, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", saved)
+        assert stats["n_sequences"] > 0
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 12
+        landed = [
+            os.path.relpath(os.path.join(root, f), f"{out}/append_batches")
+            for root, _, files in os.walk(f"{out}/append_batches")
+            for f in files
+        ]
+        assert landed == [f"batch_{first['n_shards']:06d}/stats.json"]
+        assert persisted() <= held
+
+        manifest_before = spark.read.parquet(f"{out}/manifest").collect()
+
+        def failing_parquet(self, *a, **k):
+            raise RuntimeError("simulated shard write failure")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+        with pytest.raises(RuntimeError, match="simulated shard write failure"):
+            append_training_shards(self._docs(spark, 200, 300), out, **kw)
+        monkeypatch.undo()
+        assert persisted() <= held
+        assert spark.read.parquet(f"{out}/manifest").collect() == manifest_before
+
+
+    def test_non_dense_packing_is_refused(self, spark, tmp_path, monkeypatch):
+        """The per-bin offsets rely on pack_chunks numbering seq_id densely
+        per bin; a gap must raise before any shard or manifest lands."""
+        import os
+
+        import pytest
+
+        from etl_guiacores_spark.operators.packing import PACKED_SCHEMA
+        from etl_guiacores_spark.plans import shard_writer as sw
+
+        gapped = spark.createDataFrame(
+            [(0, 0, [1], "a b", 2), (0, 2, [2], "c d", 2), (1, 0, [3], "e", 1)],
+            PACKED_SCHEMA,
+        )
+        monkeypatch.setattr(sw, "pack_chunks", lambda *a, **k: gapped)
+        out = str(tmp_path / "gapped")
+        with pytest.raises(RuntimeError, match="densely"):
+            sw.write_training_shards(self._docs(spark, 0, 5), out)
+        assert not os.path.exists(f"{out}/shards")
+        assert not os.path.exists(f"{out}/manifest")

@@ -67,3 +67,16 @@ def test_table_row_count_rejects_unknown_table():
 
     with pytest.raises(KeyError):
         tbl.table_row_count("nope", SF_A)
+
+
+def test_table_row_count_raises_on_directory_without_part_files(tmp_path):
+    # a nested layout has no top-level part files: counting it as 0
+    # rows would silently undersize every decision made from it
+    import pytest
+
+    nested = tmp_path / "events.parquet" / "day=1"
+    nested.mkdir(parents=True)
+    (nested / "part-0.parquet").write_bytes(b"")
+    with pytest.raises(FileNotFoundError, match="no top-level"):
+        tbl.table_row_count("events", str(tmp_path))
+    assert (str(tmp_path), "events") not in tbl._TABLE_ROWS
